@@ -532,7 +532,7 @@ def main() -> None:
     extras: dict = _STATE["extras"]
 
     # scaled-corpus dedup/ANN: deterministic x4/x16 corpora min-of-2 plus a
-    # single-shot x64 pin (see plans/scale_bench.py) — the empirical
+    # single-shot x64 pin (see tools/scale.py) — the empirical
     # near-linear-scaling evidence for the beyond-reference surface.
     # Measured on a FRESH SparkSession: after the suite the shared
     # session's accumulated block-manager/JVM state inflated these points
@@ -562,10 +562,7 @@ def main() -> None:
     elif _remaining() < SCALE_EST[1] + SCALE_EST[4] + TAIL_RESERVE:
         _shed("scale_block")
     else:
-        from big_data_elt_pipeline_spark.plans.scale_bench import (
-            hotkey_survivor_exhibit,
-            run_scaled,
-        )
+        from tools.scale import hotkey_survivor_exhibit, run_scaled
         from big_data_elt_pipeline_spark.session import get_spark as _gs
 
         spark.stop()
@@ -640,12 +637,10 @@ def main() -> None:
             if _remaining() < 420 + TAIL_RESERVE:
                 _shed("knnpin_x64")
             else:
-                from big_data_elt_pipeline_spark.plans.scale_bench import (
-                    knn_scale_pin,
-                )
+                from tools.pin import measure
 
-                pin = knn_scale_pin(
-                    spark, sf_dir, factors=(64,), progress=_progress
+                pin, _ = measure(
+                    "knn", spark, sf_dir, (64,), progress=_progress
                 )
                 scale_full.update(pin)
                 extras["knnpin"] = {

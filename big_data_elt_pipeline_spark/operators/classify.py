@@ -480,9 +480,14 @@ def logreg_train_fixed_point(
             .distinct()
             .agg(F.array_sort(F.collect_list("b")).alias("obs_f"))
         )
-        state = state.drop("obs").crossJoin(obs_row).withColumnRenamed(
-            "obs_f", "obs"
+        # checkpointed BEFORE docfe is freed: the returned plan must not
+        # read a released local checkpoint
+        state = (
+            state.drop("obs").crossJoin(obs_row)
+            .withColumnRenamed("obs_f", "obs")
+            .localCheckpoint(eager=True)
         )
+        _free(state_ids)
     _free(docfe_ids)
     return state.select(
         F.explode(

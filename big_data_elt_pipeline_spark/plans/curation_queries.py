@@ -489,7 +489,7 @@ def q_training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def governance_mixture(base: DataFrame) -> DataFrame:
     """The composite on an arbitrary (doc_id, lang, text) frame — also
-    driven by ``plans/scale_bench.py`` on x4/x16 salted corpora for the
+    driven by the bench's ``tools/scale.py`` on x4/x16 salted corpora for the
     wall-time linearity exhibit."""
     docs = base.select("doc_id", "text")
     red = _seed_pii(base, keep=("lang",)).select(

@@ -102,9 +102,12 @@ def incremental_gold(
     batch recompute bit-for-bit)."""
     src = pathlib.Path(source_dir)
     if not (src / "_STAGED").exists():
+        # one task per chunk => one file per chunk => one micro-batch per
+        # chunk, whatever partitioning the input frame arrives with
         df.withColumn(
             "__chunk", F.pmod(F.xxhash64(shard_col), F.lit(chunks))
-        ).write.partitionBy("__chunk").mode("overwrite").parquet(str(src / "data"))
+        ).repartition(chunks, "__chunk").write.partitionBy("__chunk").mode(
+            "overwrite").parquet(str(src / "data"))
         (src / "_STAGED").touch()
 
     raw = (

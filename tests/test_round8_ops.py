@@ -847,6 +847,27 @@ def test_logreg_partitioning_invariance(spark, docs):
     assert a == b
 
 
+def test_logreg_zero_iters_returns_untrained_model(spark, docs):
+    from big_data_elt_pipeline_spark.operators.classify import (
+        LOGREG_BUCKETS,
+        logreg_train_fixed_point,
+    )
+
+    labeled = _planted_logreg_corpus(docs)
+    rows = logreg_train_fixed_point(labeled, iters=0).collect()
+    assert rows and all(r.weight == 0.0 for r in rows)
+    observed = {
+        r.b
+        for r in labeled.select(
+            F.explode(TX.word_shingles(F.col("text"), 2)).alias("s")
+        )
+        .select(F.pmod(TX.hash60(F.col("s")), F.lit(LOGREG_BUCKETS)).alias("b"))
+        .distinct()
+        .collect()
+    }
+    assert {r.feature for r in rows} == observed | {-1}
+
+
 def _bpe_python_reference(texts, rounds):
     import collections
     import re

@@ -128,6 +128,8 @@ def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
             checkpoint_dir=ckpt,
         )
     assert len(calls) == 2  # batch 1 committed, batch 2 died
+    # one staged file per chunk, whatever the session's parallelism
+    assert len(list((tmp_path / "src" / "data").rglob("*.parquet"))) == 3
 
     recovered_batches = []
 
@@ -141,11 +143,11 @@ def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
         checkpoint_dir=ckpt,
     ).toPandas()
 
-    # resume skipped the committed batch: fewer batches than total shards,
+    # resume skipped the committed batch: it replays the other two shards,
     # and the replayed rows are exactly the un-committed remainder
     n_total = achats.count()
     assert sum(recovered_batches) < n_total
-    assert len(recovered_batches) >= 1
+    assert len(recovered_batches) == 2
 
     full = (
         achats.groupBy(key.alias(key_name))
