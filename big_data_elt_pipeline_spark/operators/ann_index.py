@@ -357,31 +357,14 @@ def ivfpq_probe(
     if tombstones_version is None:
         tombstones_version = p.get("tombstones_version", -1)
 
-    # probed-cell hull: same ranked-slice expression as the scan's probe
-    # side, reduced to ONE row holding the distinct cell set
-    q = queries.select(
-        F.col(vec_col).alias("qvec"),
-        SIM.norm(F.col(vec_col)).alias("__qn"),
+    # probed-cell hull: the scan's own probe step, reduced to ONE row
+    # holding the distinct cell set
+    qside = queries.select(
+        *SIM._query_cols(id_col, vec_col, query_id_col)
     ).crossJoin(cells)
-    ranked = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("__cells"),
-                lambda ct: F.struct(
-                    (-F.try_divide(
-                        SIM.dot(F.col("qvec"), ct["cvec"]),
-                        F.col("__qn") * ct["cvn"],
-                    )).alias("negcos"),
-                    ct["cell"].alias("cell"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
     probed = (
-        q.select(F.explode(ranked).alias("pr"))
-        .agg(F.collect_set(F.col("pr.cell")).alias("cs"))
+        SIM._probe(qside, F.col("__cells"), n_probe)
+        .agg(F.collect_set("cell").alias("cs"))
         .first()[0]
     )
 
@@ -466,36 +449,8 @@ def index_recall(
     bf = SIM.brute_force_l2_topk(
         corpus, queries, k, id_col, vec_col, query_id_col
     )
-    hits = probe.select(query_id_col, id_col).join(
-        F.broadcast(bf.select(query_id_col, id_col)), [query_id_col, id_col]
-    )
-    per = (
-        queries.select(F.col(id_col).alias(query_id_col))
-        .join(
-            F.broadcast(
-                hits.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("h"))
-            ),
-            query_id_col,
-            "left",
-        )
-        .na.fill({"h": 0})
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("h").cast("long").alias("__hits"),
-        F.min("h").cast("long").alias("__minh"),
-    ).select(
-        "n_queries",
-        F.lit(k).cast("int").alias("k"),
-        (
-            F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k))
-        ).alias("recall_at_k"),
-        (F.col("__minh").cast("double") / F.lit(k)).alias("min_recall"),
-        (
-            (F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k)))
-            >= F.lit(floor)
-        ).alias("floor_ok"),
-    )
+    rec = SIM._recall(queries, probe, bf, k, id_col, query_id_col)
+    return rec.select("*", (F.col("recall_at_k") >= F.lit(floor)).alias("floor_ok"))
 
 
 def delete_from_index(

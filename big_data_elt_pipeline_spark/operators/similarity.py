@@ -44,6 +44,254 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
+# --------------------------------------------------------------------------
+# Retrieval kernel shared by the ANN family. Each operator generates its
+# candidates its own way (cross join, bucket join, cell join, code join);
+# the retrieval contract after that is decided here, once:
+# - a query row carries (query_id, qvec, __qn), a corpus row (id, vec, __cn);
+# - a candidate is scored by cosine from per-vector norms (``_cos``) or by
+#   a decimal-snapped ADC sum (``_adc_topk``), self-pairs dropped;
+# - top-k is the exact (score desc | distance asc, id asc) order, ranked
+#   by ``row_number`` (an int).
+# --------------------------------------------------------------------------
+
+
+def _cos(a: Column, an: Column, b: Column, bn: Column) -> Column:
+    """Cosine from precomputed norms ``an``/``bn``. ``try_divide`` yields
+    NULL for zero-norm vectors (ANSI mode would otherwise raise
+    DIVIDE_BY_ZERO); downstream selection drops NULLs."""
+    return F.try_divide(dot(a, b), an * bn)
+
+
+def _query_cols(id_col: str, vec_col: str, query_id_col: str) -> list[Column]:
+    return [
+        F.col(id_col).alias(query_id_col),
+        F.col(vec_col).alias("qvec"),
+        norm(F.col(vec_col)).alias("__qn"),
+    ]
+
+
+def _corpus_cols(id_col: str, vec_col: str) -> list[Column]:
+    return [F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__cn")]
+
+
+def _pair_cos(vec_col: str) -> Column:
+    """Cosine of a (query side x corpus side) candidate pair."""
+    return _cos(F.col("qvec"), F.col("__qn"), F.col(vec_col), F.col("__cn"))
+
+
+def _scored(pairs: DataFrame, score: Column, query_id_col: str, id_col: str) -> DataFrame:
+    """Candidate pairs minus self-pairs, with ``score`` as ``cosine``."""
+    return pairs.filter(F.col(query_id_col) != F.col(id_col)).withColumn("cosine", score)
+
+
+def _topk_pairs(
+    pairs: DataFrame, k: int, query_id_col: str, id_col: str, score: Column
+) -> DataFrame:
+    """(query_id, id, cosine, rank): exact top-k by ``score`` over
+    candidate pairs, through the bounded-memory ``_topk_per_query`` heap."""
+    return _topk_per_query(_scored(pairs, score, query_id_col, id_col), k, query_id_col, id_col)
+
+
+def _ranked(df: DataFrame, k: int, part: str, *order: Column) -> DataFrame:
+    """Rows ranked 1..k per ``part`` by the total ``order`` (window path)."""
+    w = Window.partitionBy(part).orderBy(*order)
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _rescore(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """(query_id, id, cosine): exact cosine of given (query_id, id)
+    candidate pairs from the float vectors of both sides — the rerank
+    behind a quantized or stored-index front end. The candidate set is
+    query-bounded, so the query side broadcasts."""
+    return (
+        cand.join(corpus.select(*_corpus_cols(id_col, vec_col)), id_col)
+        .join(F.broadcast(queries.select(*_query_cols(id_col, vec_col, query_id_col))), query_id_col)
+        .select(query_id_col, id_col, _pair_cos(vec_col).alias("cosine"))
+    )
+
+
+def _argmax(structs: Column, score, key: str) -> Column:
+    """``key`` of the struct in ``structs`` with the highest ``score``,
+    ties to the lowest key: a lexicographic ``array_max`` over (score,
+    -key) — one map-side pass over a broadcast array, no shuffle and no
+    per-vector window (a ``Window.partitionBy(id)`` over the corpus x
+    array relation would shuffle |array| x the corpus). Matches the
+    oracle's ``row_number() ORDER BY score DESC, key ASC``."""
+    best = F.array_max(
+        F.transform(structs, lambda ct: F.struct(score(ct).alias("s"), (-ct[key]).alias("nk")))
+    )
+    return -best["nk"]
+
+
+def _nearest_cell(cells: Column, vec: Column, vn: Column) -> Column:
+    """Cell of the highest-cosine centroid in the ``(cell, cvec, cvn)`` array."""
+    return _argmax(cells, lambda ct: _cos(vec, vn, ct["cvec"], ct["cvn"]), "cell")
+
+
+def _probe(qside: DataFrame, cells: Column, n_probe: int, *keep: str) -> DataFrame:
+    """``keep`` + ``cell``, one row per probed cell: the ``n_probe``
+    highest-cosine centroids of each query (qvec, __qn), ties to the
+    lowest cell — a sorted slice of the broadcast cell array, map-side on
+    the small query side."""
+    ranked = F.slice(
+        F.array_sort(
+            F.transform(
+                cells,
+                lambda ct: F.struct(
+                    (-_cos(F.col("qvec"), F.col("__qn"), ct["cvec"], ct["cvn"])).alias("negcos"),
+                    ct["cell"].alias("cell"),
+                ),
+            )
+        ),
+        1,
+        n_probe,
+    )
+    return qside.select(*keep, F.explode(ranked).alias("pr")).select(
+        *keep, F.col("pr.cell").alias("cell")
+    )
+
+
+def _hash_pick(corpus: DataFrame, n: int, key: str, id_col: str, vec_col: str) -> DataFrame:
+    """(key, cvec): the ``n`` vectors with the smallest Knuth
+    multiplicative hash of their id (the engine-portable hash the mixture
+    sampler uses), tie-broken by id — a seeded sample expressible
+    identically in ANSI SQL. A TakeOrderedAndProject over the narrow
+    (id, vec) projection."""
+    from big_data_elt_pipeline_spark.operators.sampling import (
+        SAMPLE_A,
+        SAMPLE_C,
+        SAMPLE_M,
+    )
+
+    h = (
+        F.col(id_col).cast("long") % F.lit(SAMPLE_M) * F.lit(SAMPLE_A)
+        + F.lit(SAMPLE_C)
+    ) % F.lit(SAMPLE_M)
+    return (
+        corpus.select(F.col(id_col).alias(key), F.col(vec_col).alias("cvec"), h.alias("__h"))
+        .orderBy("__h", key)
+        .limit(n)
+    )
+
+
+def _pq_codes(frame: DataFrame, m: int, dsub: int, vec_col: str, *keep: str) -> DataFrame:
+    """``keep`` + (j, code): per subspace ``j``, the nearest codebook entry
+    of ``frame``'s vector in its ``__cents`` array (squared L2, ties to the
+    lowest cid). The generator and the argmin live in separate
+    projections: an explode next to a struct-field access makes the
+    analyzer re-derive the lambda struct's field names as col1/col2."""
+    code = _argmax(
+        F.col("__cents"),
+        lambda ct: -_pq_subdist(F.col(vec_col), ct["cvec"], F.col("j"), dsub),
+        "cid",
+    )
+    return frame.select(
+        *keep, vec_col, "__cents", F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j")
+    ).select(*keep, "j", code.alias("code"))
+
+
+def _pq_lut(
+    queries: DataFrame, books: DataFrame, m: int, dsub: int,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """(query_id, j, code, pd): each query's m x n_cents lookup table of
+    partial squared-L2 distances to the codebook entries, snapped to
+    DECIMAL(25,9) so the ADC sum is exact and order-free."""
+    return (
+        queries.crossJoin(F.broadcast(books))
+        .select(
+            F.col(id_col).alias(query_id_col),
+            F.col(vec_col).alias("__qv"),
+            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
+            F.col("__cents"),
+        )
+        .select(query_id_col, "j", F.explode("__cents").alias("ct"), F.col("__qv"))
+        .select(
+            query_id_col,
+            "j",
+            F.col("ct.cid").alias("code"),
+            F.round(_pq_subdist(F.col("__qv"), F.col("ct.cvec"), F.col("j"), dsub), 9)
+            .cast("decimal(25,9)")
+            .alias("pd"),
+        )
+    )
+
+
+def _adc_topk(
+    codes: DataFrame, lut: DataFrame, keys: list[str], k: int,
+    query_id_col: str, id_col: str,
+) -> DataFrame:
+    """(query_id, id, adc_l2sq, rank): the ADC scan — code rows equi-joined
+    to the broadcast LUT on ``keys``, one partial-aggregated decimal sum
+    per (query, candidate), then the (distance asc, id asc) window."""
+    scored = (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col(query_id_col) != F.col(id_col))
+        .groupBy(query_id_col, id_col)
+        .agg(F.sum("pd").cast("double").alias("adc_l2sq"))
+    )
+    return _ranked(scored, k, query_id_col, F.asc("adc_l2sq"), F.asc(id_col)).select(
+        query_id_col, id_col, "adc_l2sq", "rank"
+    )
+
+
+def _recall(
+    queries: DataFrame, approx: DataFrame, truth: DataFrame, k: int,
+    id_col: str, query_id_col: str,
+) -> DataFrame:
+    """ONE row (n_queries, k, recall_at_k, min_recall) of ``approx``
+    against ``truth``. Integer until the final division — total hits and
+    min per-query hits are exact longs and ``hits/(n_queries*k)`` is one
+    integer→double division — so the value is bit-identical in any engine
+    regardless of float summation order. Both top-k relations are
+    <= n_queries x k rows, so they broadcast and the rollup never
+    sort-merge-joins."""
+    hits = approx.select(query_id_col, id_col).join(
+        F.broadcast(truth.select(query_id_col, id_col)), [query_id_col, id_col]
+    )
+    per = (
+        queries.select(F.col(id_col).alias(query_id_col))
+        .join(
+            F.broadcast(hits.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("h"))),
+            query_id_col,
+            "left",
+        )
+        .na.fill({"h": 0})
+    )
+    return per.agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        F.sum("h").cast("long").alias("__hits"),
+        F.min("h").cast("long").alias("__minh"),
+    ).select(
+        "n_queries",
+        F.lit(k).cast("int").alias("k"),
+        (F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k))).alias("recall_at_k"),
+        (F.col("__minh").cast("double") / F.lit(k)).alias("min_recall"),
+    )
+
+
+def _bucketer(corpus: DataFrame, n_bits: int | None, target_rows: int, vec_col: str):
+    """``project(frame, *cols)`` → ``cols`` + ``bucket``: the centred
+    sign bucket of ``frame``'s ``vec_col`` on the exact per-dim means of
+    ``corpus`` (``component_means``, one broadcast row), so corpus and
+    query vectors centre on the same means. ``n_bits`` defaults to the
+    corpus-derived width for ``target_rows`` (``derive_bits``)."""
+    if n_bits is None:
+        n_bits = derive_bits(corpus, target_rows, vec_col)
+    mu = F.broadcast(component_means(corpus, n_bits, vec_col))
+
+    def project(frame: DataFrame, *cols: Column) -> DataFrame:
+        return frame.crossJoin(mu).select(
+            *cols, sign_bucket(F.col(vec_col), n_bits, F.col("__mus")).alias("bucket")
+        )
+
+    return project
+
+
 def _topk_per_query(
     scored: DataFrame, k: int, query_id_col: str, id_col: str
 ) -> DataFrame:
@@ -105,11 +353,8 @@ def _topk_per_query(
             yield pd.DataFrame({query_id_col: buf_q, id_col: buf_i, "cosine": buf_c})
 
     reduced = narrow.mapInPandas(local_topk, schema=narrow.schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        reduced.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+    return _ranked(reduced, k, query_id_col, F.desc("cosine"), F.asc(id_col)).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 
@@ -127,23 +372,9 @@ def brute_force_topk(
     uses a per-query window with a deterministic (cosine desc, id asc)
     tie-break so top-k is stable across engines and partitionings.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("qvec"),
-            norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    scored = (
-        corpus.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__cn"))
-        .crossJoin(q)
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "cosine",
-            F.try_divide(dot(F.col("qvec"), F.col(vec_col)), F.col("__qn") * F.col("__cn")),
-        )
-    )
-    return _topk_per_query(scored, k, query_id_col, id_col)
+    q = F.broadcast(queries.select(*_query_cols(id_col, vec_col, query_id_col)))
+    pairs = corpus.select(*_corpus_cols(id_col, vec_col)).crossJoin(q)
+    return _topk_pairs(pairs, k, query_id_col, id_col, _pair_cos(vec_col))
 
 
 def l2sq(a: Column, b: Column) -> Column:
@@ -182,19 +413,10 @@ def brute_force_l2_topk(
     an exact IEEE sign flip, ties unchanged), then surfaces the positive
     distance back.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("qvec"),
-        )
-    )
-    scored = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .crossJoin(q)
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn("cosine", -l2sq(F.col("qvec"), F.col(vec_col)))
-    )
-    return _topk_per_query(scored, k, query_id_col, id_col).select(
+    q = F.broadcast(queries.select(*_query_cols(id_col, vec_col, query_id_col)))
+    pairs = corpus.select(*_corpus_cols(id_col, vec_col)).crossJoin(q)
+    score = -l2sq(F.col("qvec"), F.col(vec_col))
+    return _topk_pairs(pairs, k, query_id_col, id_col, score).select(
         query_id_col, id_col, (-F.col("cosine")).alias("l2sq"), "rank"
     )
 
@@ -426,31 +648,10 @@ def lsh_topk(
     ~``target/n`` as the corpus grows instead of decaying quadratically
     at a fixed width.
     """
-    if n_bits is None:
-        n_bits = derive_bits(corpus, LSH_TARGET_BUCKET_ROWS, vec_col)
-    mu = F.broadcast(component_means(corpus, n_bits, vec_col))
-    cb = corpus.crossJoin(mu).select(
-        F.col(id_col), F.col(vec_col),
-        sign_bucket(F.col(vec_col), n_bits, F.col("__mus")).alias("bucket"),
-        norm(F.col(vec_col)).alias("__cn"),
-    )
-    qb = F.broadcast(
-        queries.crossJoin(mu).select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("qvec"),
-            sign_bucket(F.col(vec_col), n_bits, F.col("__mus")).alias("bucket"),
-            norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    scored = (
-        cb.join(qb, "bucket")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "cosine",
-            F.try_divide(dot(F.col("qvec"), F.col(vec_col)), F.col("__qn") * F.col("__cn")),
-        )
-    )
-    return _topk_per_query(scored, k, query_id_col, id_col)
+    bucket = _bucketer(corpus, n_bits, LSH_TARGET_BUCKET_ROWS, vec_col)
+    cb = bucket(corpus, *_corpus_cols(id_col, vec_col))
+    qb = F.broadcast(bucket(queries, *_query_cols(id_col, vec_col, query_id_col)))
+    return _topk_pairs(cb.join(qb, "bucket"), k, query_id_col, id_col, _pair_cos(vec_col))
 
 
 def ivf_topk(
@@ -475,12 +676,16 @@ def ivf_topk(
     the corpus per query instead of all of it.
 
     ``fit_corpus`` (same schema as ``corpus``) feeds ONLY the quantizer
-    fit (r15, guide §2.2): a pyspark.ml fit launches one job per
-    optimizer round, so a caller whose ``corpus`` carries the
-    input-spread repartition can hand the fit the natural (unspread)
-    scan instead — the spread helps wide map stages, but for the
-    iterative fit loop it multiplies per-round task fan-out. Assignment,
-    probing and scoring still run on ``corpus``.
+    fit: a pyspark.ml fit launches one job per optimizer round, so a
+    caller whose ``corpus`` carries the input-spread repartition can hand
+    the fit the natural (unspread) scan instead — the spread helps wide
+    map stages, but for the iterative fit loop it multiplies per-round
+    task fan-out. Assignment, probing and scoring still run on
+    ``corpus``. It is not a pure performance switch: k-means|| init
+    samples per partition, so the fitted centroids — and with them the
+    probed cells and the recall — depend on the fit input's partitioning
+    and can move with it. That is why ``ann_ivf_topk`` is gated by a
+    recall floor rather than by exact rows.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import VectorAssembler
@@ -499,9 +704,7 @@ def ivf_topk(
     km = KMeans(featuresCol="__v", predictionCol="cell", k=n_cells, seed=seed).fit(
         _vecs(fit_corpus) if fit_corpus is not None else vecs
     )
-    assigned = km.transform(vecs).select(
-        id_col, vec_col, "cell", norm(F.col(vec_col)).alias("__cn")
-    )
+    assigned = km.transform(vecs).select(*_corpus_cols(id_col, vec_col), "cell")
 
     centroids = [[float(x) for x in c] for c in km.clusterCenters()]
     cent_df = F.broadcast(
@@ -509,28 +712,16 @@ def ivf_topk(
             [(i, c) for i, c in enumerate(centroids)], "cell int, centroid array<double>"
         )
     )
-    # each query ranks centroids and keeps its n_probe nearest cells
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("__qn"),
-    ).crossJoin(cent_df).withColumn("cdist", dot(F.col("qvec"), F.col("centroid")))
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("cdist"), F.asc("cell"))
-    probes = (
-        q.withColumn("__r", F.row_number().over(wq))
-        .filter(F.col("__r") <= n_probe)
-        .select(query_id_col, "qvec", "__qn", "cell")
+    # each query ranks centroids by dot product and keeps its n_probe
+    # nearest cells
+    q = queries.select(*_query_cols(id_col, vec_col, query_id_col)).crossJoin(
+        cent_df
+    ).withColumn("cdist", dot(F.col("qvec"), F.col("centroid")))
+    probes = _ranked(q, n_probe, query_id_col, F.desc("cdist"), F.asc("cell")).select(
+        query_id_col, "qvec", "__qn", "cell"
     )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "cosine",
-            F.try_divide(dot(F.col("qvec"), F.col(vec_col)), F.col("__qn") * F.col("__cn")),
-        )
-    )
-    out = _topk_per_query(scored, k, query_id_col, id_col)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    pairs = assigned.join(F.broadcast(probes), "cell")
+    return _topk_pairs(pairs, k, query_id_col, id_col, _pair_cos(vec_col))
 
 
 def fixed_centroid_cells(
@@ -540,34 +731,19 @@ def fixed_centroid_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic IVF coarse quantizer: centroids are a SEEDED SAMPLE of
-    the corpus itself — the ``n_cells`` vectors with the smallest Knuth
-    multiplicative hash of their id (the same engine-portable hash the
-    mixture sampler uses), tie-broken by id. Random-sample centroids are a
-    standard IVF baseline quantizer, and unlike k-means the pick is
-    expressible identically in ANSI SQL, so IVF results — and therefore
-    recall — are oracle-checkable bit-for-bit.
+    the corpus itself — the ``n_cells`` vectors of the Knuth-hash pick
+    (``_hash_pick``). Random-sample centroids are a standard IVF baseline
+    quantizer, and unlike k-means the pick is expressible identically in
+    ANSI SQL, so IVF results — and therefore recall — are oracle-checkable
+    bit-for-bit.
 
     Returns a ONE-ROW frame holding the centroid list as an array of
     (cell, cvec, cvn) structs: broadcast-crossed into the corpus, cell
     assignment becomes a pure map-side array expression — zero shuffle and
-    zero driver collect at any corpus size (the pick itself is a
-    TakeOrderedAndProject over the narrow (id, vec) projection).
+    zero driver collect at any corpus size.
     """
-    from big_data_elt_pipeline_spark.operators.sampling import (
-        SAMPLE_A,
-        SAMPLE_C,
-        SAMPLE_M,
-    )
-
-    h = (
-        F.col(id_col).cast("long") % F.lit(SAMPLE_M) * F.lit(SAMPLE_A)
-        + F.lit(SAMPLE_C)
-    ) % F.lit(SAMPLE_M)
-    cents = (
-        corpus.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"), h.alias("__h"))
-        .orderBy("__h", "cell")
-        .limit(n_cells)
-        .select("cell", "cvec", norm(F.col("cvec")).alias("cvn"))
+    cents = _hash_pick(corpus, n_cells, "cell", id_col, vec_col).select(
+        "cell", "cvec", norm(F.col("cvec")).alias("cvn")
     )
     return cents.agg(F.collect_list(F.struct("cell", "cvec", "cvn")).alias("__cents"))
 
@@ -587,76 +763,24 @@ def ivf_fixed_topk(
     nearest centroid (cosine, ties to the lowest cell id); each query
     probes its ``n_probe`` nearest cells; only those candidates are ranked.
 
-    Scale shape: assignment is ``array_max`` over the broadcast centroid
-    struct list — one codegen map pass, NO shuffle and NO per-vector
-    window (a ``Window.partitionBy(vec_id)`` over the corpus x n_cells
-    relation would shuffle 16x the corpus); probing is the same expression
-    with ``array_sort``+``slice`` on the tiny query side; candidates come
-    from the cell equi-join, then the bounded-memory ``_topk_per_query``
-    reducer. Zero-norm vectors (NULL cosine under ``try_divide``) are
-    assumed absent, as everywhere in this module.
+    Scale shape: assignment is ``_nearest_cell`` over the broadcast
+    centroid struct list — one codegen map pass, NO shuffle and NO
+    per-vector window; probing is ``_probe`` on the tiny query side;
+    candidates come from the cell equi-join, then the bounded-memory
+    ``_topk_per_query`` reducer. Zero-norm vectors (NULL cosine under
+    ``try_divide``) are assumed absent, as everywhere in this module.
     """
-
     if n_cells is None:
         n_cells = derive_cells(corpus)
-
-    def cos_to(vec: Column, vn: Column):
-        return lambda ct: F.try_divide(dot(vec, ct["cvec"]), vn * ct["cvn"])
-
-    cents1 = F.broadcast(fixed_centroid_cells(corpus, n_cells, id_col, vec_col))
-
-    c = corpus.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__cn")
-    ).crossJoin(cents1)
-    # argmax(cosine) via lexicographic struct max: highest cosine, then
-    # highest -cell == lowest cell — identical to the oracle's
-    # row_number() ORDER BY cos DESC, cell ASC
-    best = F.array_max(
-        F.transform(
-            F.col("__cents"),
-            lambda ct: F.struct(
-                cos_to(F.col(vec_col), F.col("__cn"))(ct).alias("cos"),
-                (-ct["cell"]).alias("negcell"),
-            ),
-        )
+    cents = F.broadcast(fixed_centroid_cells(corpus, n_cells, id_col, vec_col))
+    assigned = corpus.select(*_corpus_cols(id_col, vec_col)).crossJoin(cents).select(
+        id_col, vec_col, "__cn",
+        _nearest_cell(F.col("__cents"), F.col(vec_col), F.col("__cn")).alias("cell"),
     )
-    assigned = c.select(
-        F.col(id_col), F.col(vec_col), F.col("__cn"), (-best["negcell"]).alias("cell")
-    )
-
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("__qn"),
-    ).crossJoin(cents1)
-    ranked_cells = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("__cents"),
-                lambda ct: F.struct(
-                    (-cos_to(F.col("qvec"), F.col("__qn"))(ct)).alias("negcos"),
-                    ct["cell"].alias("cell"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    probes = (
-        q.select(query_id_col, "qvec", "__qn", F.explode(ranked_cells).alias("pr"))
-        .select(query_id_col, "qvec", "__qn", F.col("pr.cell").alias("cell"))
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "cosine",
-            F.try_divide(dot(F.col("qvec"), F.col(vec_col)), F.col("__qn") * F.col("__cn")),
-        )
-    )
-    out = _topk_per_query(scored, k, query_id_col, id_col)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    qside = queries.select(*_query_cols(id_col, vec_col, query_id_col)).crossJoin(cents)
+    probes = _probe(qside, F.col("__cents"), n_probe, query_id_col, "qvec", "__qn")
+    pairs = assigned.join(F.broadcast(probes), "cell")
+    return _topk_pairs(pairs, k, query_id_col, id_col, _pair_cos(vec_col))
 
 
 def ivf_recall(
@@ -670,40 +794,13 @@ def ivf_recall(
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """Recall@k of the deterministic IVF against exact brute force, as ONE
-    scalar row: (n_queries, k, recall_at_k, min_recall).
-
-    The aggregation is integer until the final division — total hit count
-    and min per-query hits are exact longs, and ``hits/(n_queries*k)`` is
-    a single integer→double division — so the result is bit-identical in
-    any engine regardless of float summation order (a mean over per-query
-    double recalls would not be).
+    scalar row: (n_queries, k, recall_at_k, min_recall) — bit-identical in
+    any engine (``_recall``; a mean over per-query double recalls would
+    not be).
     """
     bf = brute_force_topk(corpus, queries, k, id_col, vec_col, query_id_col)
     ivf = ivf_fixed_topk(corpus, queries, k, n_cells, n_probe, id_col, vec_col, query_id_col)
-    # both top-k relations are <= n_queries x k rows by construction —
-    # broadcast them so the recall rollup never sort-merge-joins
-    hits = ivf.select(query_id_col, id_col).join(
-        F.broadcast(bf.select(query_id_col, id_col)), [query_id_col, id_col]
-    )
-    per = (
-        queries.select(F.col(id_col).alias(query_id_col))
-        .join(
-            F.broadcast(hits.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("h"))),
-            query_id_col,
-            "left",
-        )
-        .na.fill({"h": 0})
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("h").cast("long").alias("__hits"),
-        F.min("h").cast("long").alias("__minh"),
-    ).select(
-        "n_queries",
-        F.lit(k).cast("int").alias("k"),
-        (F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k))).alias("recall_at_k"),
-        (F.col("__minh").cast("double") / F.lit(k)).alias("min_recall"),
-    )
+    return _recall(queries, ivf, bf, k, id_col, query_id_col)
 
 
 def embedding_neardup(
@@ -725,31 +822,14 @@ def embedding_neardup(
     ~1-row expected bucket — the tightest target in the family, because an
     all-pairs scan keeps EVERY pair over the threshold): the self-join pair
     space stays ~n instead of n²/2^const as the corpus grows."""
-    if n_bits is None:
-        n_bits = derive_bits(corpus, NEARDUP_TARGET_BUCKET_ROWS, vec_col)
-    mu = F.broadcast(component_means(corpus, n_bits, vec_col))
-    b = corpus.crossJoin(mu).select(
-        F.col(id_col), F.col(vec_col),
-        sign_bucket(F.col(vec_col), n_bits, F.col("__mus")).alias("bucket"),
-        norm(F.col(vec_col)).alias("__n"),
-    )
-    l, r = b.alias("l"), b.alias("r")
+    bucket = _bucketer(corpus, n_bits, NEARDUP_TARGET_BUCKET_ROWS, vec_col)
     return (
-        l.join(r, "bucket")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .withColumn(
-            "cosine",
-            F.try_divide(
-                dot(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")),
-                F.col("l.__n") * F.col("r.__n"),
-            ),
-        )
+        bucket(corpus, *_query_cols(id_col, vec_col, "id1"))
+        .join(bucket(corpus, *_corpus_cols(id_col, vec_col)), "bucket")
+        .filter(F.col("id1") < F.col(id_col))
+        .withColumn("cosine", _pair_cos(vec_col))
         .filter(F.col("cosine") >= F.lit(threshold))
-        .select(
-            F.col(f"l.{id_col}").alias("id1"),
-            F.col(f"r.{id_col}").alias("id2"),
-            "cosine",
-        )
+        .select("id1", F.col(id_col).alias("id2"), "cosine")
     )
 
 
@@ -847,65 +927,28 @@ def sq8_topk(
     for the candidate side). Candidate scores are cosines over the
     deterministically dequantized codes, so the candidate SET — and hence
     the exact reranked result — is bit-identical across engines.
+
+    Query vectors are the queries' own, quantized with the CORPUS stats
+    for the first pass and exact for the rerank, so a query need not be
+    a corpus member.
     """
     stats = F.broadcast(sq8_train(corpus, vec_col))
-    recon = (
-        corpus.crossJoin(stats)
-        .select(
+
+    def dequantized(frame: DataFrame) -> DataFrame:
+        mns, scs = F.col("mns"), F.col("scs")
+        return frame.crossJoin(stats).select(
             F.col(id_col),
-            sq8_reconstruct(
-                sq8_encode(F.col(vec_col), F.col("mns"), F.col("scs")),
-                F.col("mns"),
-                F.col("scs"),
-            ).alias("xhat"),
+            sq8_reconstruct(sq8_encode(F.col(vec_col), mns, scs), mns, scs).alias(vec_col),
         )
-        .withColumn("__cn", norm(F.col("xhat")))
-    )
-    q = F.broadcast(
-        recon.join(queries.select(id_col), id_col).select(
-            F.col(id_col).alias(query_id_col),
-            F.col("xhat").alias("qhat"),
-            F.col("__cn").alias("__qn"),
-        )
-    )
-    scored = (
-        recon.crossJoin(q)
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .withColumn(
-            "cosine",
-            F.try_divide(
-                dot(F.col("qhat"), F.col("xhat")), F.col("__qn") * F.col("__cn")
-            ),
-        )
-    )
-    cand = _topk_per_query(scored, k * overfetch, query_id_col, id_col).select(
-        query_id_col, id_col
-    )
-    qx = F.broadcast(
-        corpus.join(queries.select(id_col), id_col).select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("qvec"),
-            norm(F.col(vec_col)).alias("__qn"),
-        )
-    )
-    rer = (
-        cand.join(
-            corpus.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__cn")),
-            id_col,
-        )
-        .join(qx, query_id_col)
-        .withColumn(
-            "cosine",
-            F.try_divide(
-                dot(F.col("qvec"), F.col(vec_col)), F.col("__qn") * F.col("__cn")
-            ),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+
+    recon = dequantized(corpus).select(*_corpus_cols(id_col, vec_col))
+    q = F.broadcast(dequantized(queries).select(*_query_cols(id_col, vec_col, query_id_col)))
+    cand = _topk_pairs(
+        recon.crossJoin(q), k * overfetch, query_id_col, id_col, _pair_cos(vec_col)
+    ).select(query_id_col, id_col)
+    rer = _rescore(cand, corpus, queries, id_col, vec_col, query_id_col)
+    return _ranked(rer, k, query_id_col, F.desc("cosine"), F.asc(id_col)).select(
+        query_id_col, id_col, "cosine", "rank"
     )
 
 
@@ -932,21 +975,8 @@ def pq_codebooks(
     SQL-expressible — k-means codebooks would be engine-defined and
     unhashable; sampled codebooks are the standard determinism-preserving
     baseline, and the PQ plumbing is identical either way)."""
-    from big_data_elt_pipeline_spark.operators.sampling import (
-        SAMPLE_A,
-        SAMPLE_C,
-        SAMPLE_M,
-    )
-
-    h = (
-        F.col(id_col).cast("long") % F.lit(SAMPLE_M) * F.lit(SAMPLE_A)
-        + F.lit(SAMPLE_C)
-    ) % F.lit(SAMPLE_M)
-    cents = (
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"), h.alias("__h"))
-        .orderBy("__h", "cid")
-        .limit(n_cents)
-        .select("cid", F.col("cvec").cast("array<double>").alias("cvec"))
+    cents = _hash_pick(corpus, n_cents, "cid", id_col, vec_col).select(
+        "cid", F.col("cvec").cast("array<double>").alias("cvec")
     )
     return cents.agg(F.collect_list(F.struct("cid", "cvec")).alias("__cents"))
 
@@ -978,28 +1008,10 @@ def pq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, j, code): each vector's nearest codebook entry per subspace
-    (squared L2, ties to the lowest cid). The argmin is ``array_max`` over
+    (squared L2, ties to the lowest cid). The argmin is ``_argmax`` over
     the broadcast codebook struct array — one codegen map pass per
-    (vector, subspace), NO shuffle and NO per-vector window (the
-    ``ivf_fixed_topk`` assignment discipline)."""
-    v = F.col(vec_col)
-    best = F.array_max(
-        F.transform(
-            F.col("__cents"),
-            lambda ct: F.struct(
-                (-_pq_subdist(v, ct["cvec"], F.col("j"), dsub)).alias("nd"),
-                (-ct["cid"]).alias("nc"),
-            ),
-        )
-    )
-    return (
-        corpus.crossJoin(F.broadcast(books))
-        .select(
-            id_col, vec_col, "__cents",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-        )
-        .select(F.col(id_col), F.col("j").cast("int").alias("j"), (-best["nc"]).alias("code"))
-    )
+    (vector, subspace), NO shuffle and NO per-vector window."""
+    return _pq_codes(corpus.crossJoin(F.broadcast(books)), m, dsub, vec_col, id_col)
 
 
 def pq_topk(
@@ -1033,42 +1045,8 @@ def pq_topk(
     are bit-identical cross-engine. Ties break to the lowest id."""
     books = pq_codebooks(corpus, n_cents, id_col, vec_col)
     codes = pq_encode(corpus, books, m, dsub, id_col, vec_col)
-    qv = F.col(vec_col)
-    lut = (
-        queries.crossJoin(F.broadcast(books))
-        .select(
-            F.col(id_col).alias(query_id_col),
-            vec_col,
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-            F.col("__cents"),
-        )
-        .select(
-            query_id_col,
-            F.col("j").cast("int").alias("j"),
-            F.explode("__cents").alias("ct"),
-            qv.alias("__qv"),
-        )
-        .select(
-            query_id_col,
-            "j",
-            F.col("ct.cid").alias("code"),
-            F.round(_pq_subdist(F.col("__qv"), F.col("ct.cvec"), F.col("j"), dsub), 9)
-            .cast("decimal(25,9)")
-            .alias("pd"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["j", "code"])
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("pd").cast("double").alias("adc_l2sq"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("adc_l2sq"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_l2sq", "rank")
-    )
+    lut = _pq_lut(queries, books, m, dsub, id_col, vec_col, query_id_col)
+    return _adc_topk(codes, lut, ["j", "code"], k, query_id_col, id_col)
 
 
 def ivfpq_encode_relations(
@@ -1116,54 +1094,18 @@ def ivfpq_encode_with_state(
     valid and an append is one map pass over the delta only
     (``ann_index.append_to_index``)."""
     v = F.col(vec_col)
-    # argmax(cosine to centroid) — highest cos, ties to lowest cell id
-    best_cell = F.array_max(
-        F.transform(
-            F.col("__cells"),
-            lambda ct: F.struct(
-                F.try_divide(dot(v, ct["cvec"]), F.col("__cn") * ct["cvn"]).alias("cos"),
-                (-ct["cell"]).alias("negcell"),
-            ),
-        )
-    )
-    # argmin(subspace L2) per exploded j — lowest distance, ties to lowest cid
-    best_code = F.array_max(
-        F.transform(
-            F.col("__cents"),
-            lambda ct: F.struct(
-                (-_pq_subdist(v, ct["cvec"], F.col("j"), dsub)).alias("nd"),
-                (-ct["cid"]).alias("nc"),
-            ),
-        )
-    )
-    # the struct-field access and the generator must live in SEPARATE
-    # projections — an explode alongside best_cell["negcell"] makes the
-    # analyzer re-derive the lambda struct's field names as col1/col2
-    encoded = (
-        corpus.select(F.col(id_col), v, norm(v).alias("__cn"))
+    with_cell = (
+        corpus.select(*_corpus_cols(id_col, vec_col))
         .crossJoin(cells)
         .crossJoin(books)
         .select(
             F.col(id_col),
             v,
-            (-best_cell["negcell"]).alias("cell"),
+            _nearest_cell(F.col("__cells"), v, F.col("__cn")).alias("cell"),
             F.col("__cents"),
         )
-        .select(
-            F.col(id_col),
-            v,
-            "cell",
-            "__cents",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-        )
-        .select(
-            F.col(id_col),
-            "cell",
-            F.col("j").cast("int").alias("j"),
-            (-best_code["nc"]).alias("code"),
-        )
     )
-    return encoded
+    return _pq_codes(with_cell, m, dsub, vec_col, id_col, "cell")
 
 
 def ivfpq_adc_scan(
@@ -1185,70 +1127,11 @@ def ivfpq_adc_scan(
     corpus is never touched — queries cost |queries| x state work plus
     the pruned code scan, which is what makes a persisted index
     (build once, probe many) the 100 TB serving shape."""
-    # query side: n_probe nearest cells (slice of the sorted broadcast
-    # struct array — the ivf_fixed_topk probe shape)
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("__qn"),
-    ).crossJoin(cells)
-    ranked_cells = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("__cells"),
-                lambda ct: F.struct(
-                    (-F.try_divide(
-                        dot(F.col("qvec"), ct["cvec"]), F.col("__qn") * ct["cvn"]
-                    )).alias("negcos"),
-                    ct["cell"].alias("cell"),
-                ),
-            )
-        ),
-        1,
-        n_probe,
-    )
-    probes = q.select(
-        query_id_col, F.explode(ranked_cells).alias("pr")
-    ).select(query_id_col, F.col("pr.cell").alias("cell"))
-
-    # query LUT: m x n_cents decimal-snapped partial distances
-    lut = (
-        queries.crossJoin(books)
-        .select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("__qv"),
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("j"),
-            F.col("__cents"),
-        )
-        .select(
-            query_id_col,
-            F.col("j").cast("int").alias("j"),
-            F.explode("__cents").alias("ct"),
-            F.col("__qv"),
-        )
-        .select(
-            query_id_col,
-            "j",
-            F.col("ct.cid").alias("code"),
-            F.round(_pq_subdist(F.col("__qv"), F.col("ct.cvec"), F.col("j"), dsub), 9)
-            .cast("decimal(25,9)")
-            .alias("pd"),
-        )
-    )
-
-    scored = (
-        encoded.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut), [query_id_col, "j", "code"])
-        .filter(F.col(query_id_col) != F.col(id_col))
-        .groupBy(query_id_col, id_col)
-        .agg(F.sum("pd").cast("double").alias("adc_l2sq"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("adc_l2sq"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "adc_l2sq", "rank")
-    )
+    qside = queries.select(*_query_cols(id_col, vec_col, query_id_col)).crossJoin(cells)
+    probes = _probe(qside, F.col("__cells"), n_probe, query_id_col)
+    lut = _pq_lut(queries, books, m, dsub, id_col, vec_col, query_id_col)
+    pruned = encoded.join(F.broadcast(probes), "cell")
+    return _adc_topk(pruned, lut, [query_id_col, "j", "code"], k, query_id_col, id_col)
 
 
 def ivfpq_topk(
@@ -1364,13 +1247,10 @@ def mmr_rerank(
         candidates = brute_force_topk(
             corpus, queries, n_cand, id_col, vec_col, query_id_col
         )
-    emb = corpus.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("__n")
-    )
     cand = (
         candidates.select(query_id_col, id_col, "cosine")
-        .join(emb, id_col)
-        .select(query_id_col, id_col, "cosine", vec_col, "__n")
+        .join(corpus.select(*_corpus_cols(id_col, vec_col)), id_col)
+        .select(query_id_col, id_col, "cosine", vec_col, "__cn")
     )
 
     # pairwise sims inside each candidate list: n_cand^2 rows per query,
@@ -1379,13 +1259,13 @@ def mmr_rerank(
         F.col(query_id_col),
         F.col(id_col).alias("a_id"),
         F.col(vec_col).alias("avec"),
-        F.col("__n").alias("an"),
+        F.col("__cn").alias("an"),
     )
     b = cand.select(
         F.col(query_id_col),
         F.col(id_col).alias("b_id"),
         F.col(vec_col).alias("bvec"),
-        F.col("__n").alias("bn"),
+        F.col("__cn").alias("bn"),
     )
     # both relations are candidate-bounded (nq x n_cand and nq x n_cand^2);
     # eager checkpoints cut the k-round lineage — without them each round
@@ -1398,17 +1278,13 @@ def mmr_rerank(
             query_id_col,
             "a_id",
             "b_id",
-            F.try_divide(
-                dot(F.col("avec"), F.col("bvec")), F.col("an") * F.col("bn")
-            ).alias("s"),
+            _cos(F.col("avec"), F.col("an"), F.col("bvec"), F.col("bn")).alias("s"),
         )
     )
 
     slim = _ckpt(cand.select(query_id_col, id_col, "cosine"))
-    w1 = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
     sel = (
-        slim.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
+        _ranked(slim, 1, query_id_col, F.desc("cosine"), F.asc(id_col))
         .select(
             query_id_col,
             id_col,
@@ -1431,12 +1307,8 @@ def mmr_rerank(
             .join(ms, [query_id_col, id_col])
             .withColumn("mmr_score", lam_c * F.col("cosine") - om_c * F.col("max_sim"))
         )
-        wr = Window.partitionBy(query_id_col).orderBy(
-            F.desc("mmr_score"), F.asc(id_col)
-        )
         pick = (
-            pool.withColumn("__rn", F.row_number().over(wr))
-            .filter(F.col("__rn") == 1)
+            _ranked(pool, 1, query_id_col, F.desc("mmr_score"), F.asc(id_col))
             .select(
                 query_id_col,
                 id_col,
@@ -1883,37 +1755,14 @@ def knn_graph(
     the all-pairs neardup scan): the r10 x64 pin proved a FIXED width is
     pair-count quadratic (6.7 s → 105 s for 4× data at 8 bits); with the
     derived width the pair space is ~32n at any corpus size."""
-    if n_bits is None:
-        n_bits = derive_bits(emb, KNN_TARGET_BUCKET_ROWS, vec_col)
-    v = F.col(vec_col)
-    mu = F.broadcast(component_means(emb, n_bits, vec_col))
-    b = emb.crossJoin(mu).select(
-        F.col(id_col).alias("src"),
-        v.alias("sv"),
-        norm(v).alias("sn"),
-        sign_bucket(v, n_bits, F.col("__mus")).alias("bucket"),
+    bucket = _bucketer(emb, n_bits, KNN_TARGET_BUCKET_ROWS, vec_col)
+    pairs = bucket(emb, *_query_cols(id_col, vec_col, "src")).join(
+        bucket(emb, *_corpus_cols(id_col, vec_col)), "bucket"
     )
-    o = emb.crossJoin(mu).select(
-        F.col(id_col).alias("dst"),
-        v.alias("dv"),
-        norm(v).alias("dn"),
-        sign_bucket(v, n_bits, F.col("__mus")).alias("bucket"),
+    scored = _scored(pairs, _pair_cos(vec_col), "src", id_col).select(
+        "src", F.col(id_col).alias("dst"), "cosine"
     )
-    scored = (
-        b.join(o, "bucket")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            "src",
-            "dst",
-            F.try_divide(
-                dot(F.col("sv"), F.col("dv")), F.col("sn") * F.col("dn")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cosine"), F.asc("dst"))
-    edges = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    edges = _ranked(scored, k, "src", F.desc("cosine"), F.asc("dst"))
     rev = edges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"),
         F.lit(True).alias("m"),
@@ -1922,6 +1771,6 @@ def knn_graph(
         "src",
         "dst",
         "cosine",
-        F.col("rank").cast("int").alias("rank"),
+        "rank",
         F.coalesce("m", F.lit(False)).alias("mutual"),
     )

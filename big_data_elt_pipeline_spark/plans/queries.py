@@ -1053,7 +1053,7 @@ from big_data_elt_pipeline_spark.plans import text_queries  # noqa: E402,F401
 # ``ann_ivf_recall`` (green r05-r07; similarity keeps
 # ann_quantized_topk / hybrid_rrf_topk / covariance / pca / kmeans gated,
 # the annex keeps ann_ivf_topk, and the recall contract stays pinned in
-# test_ivf + the local sweep).
+# tests/test_ann.py + the local sweep).
 # Round-8 eleventh pass: IN ``lang_id_report`` (per-class
 # precision/recall/F1 of the heuristic language ID — the hard-decision
 # companion of classifier_auc; exact integer counts, NULL-pinned ratio

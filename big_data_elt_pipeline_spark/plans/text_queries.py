@@ -768,8 +768,7 @@ QUALIFY rank <= 5
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    out = SIM.brute_force_topk(emb, queries, k=5)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return SIM.brute_force_topk(emb, queries, k=5)
 
 
 def _sign_bucket_sql(vec: str, n_bits: int, mus: str | None = None) -> str:
@@ -973,7 +972,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     4/16 -> ~25% of the corpus scanned; the floor is deliberately below
     the band to absorb k-means seed drift, not to flatter it). An
     out-of-floor regression flips the boolean and fails the driver hash.
-    Raw top-k rows stay covered by tests/test_ivf.py; the exactness
+    Raw top-k rows stay covered by tests/test_ann.py; the exactness
     anchor is ``ann_topk``; the engine-portable-quantizer twin is
     ``ann_ivf_recall``."""
     emb = read_table(spark, sf_dir, "embeddings")
@@ -989,28 +988,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         fit_corpus=read_table(spark, sf_dir, "embeddings", spread=False),
     )
     bf = SIM.brute_force_topk(emb, queries, k=k)
-    hits = ivf.select("query_id", "vec_id").join(
-        F.broadcast(bf.select("query_id", "vec_id")), ["query_id", "vec_id"]
-    )
-    per = (
-        queries.select(F.col("vec_id").alias("query_id"))
-        .join(
-            F.broadcast(hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("h"))),
-            "query_id",
-            "left",
-        )
-        .na.fill({"h": 0})
-    )
-    return per.agg(
-        F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.sum("h").alias("__hits"),
-    ).select(
-        "n_queries",
-        F.lit(k).cast("int").alias("k"),
-        (
-            F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k))
-            >= F.lit(0.35)
-        ).alias("recall_floor_met"),
+    return SIM._recall(queries, ivf, bf, k, "vec_id", "query_id").select(
+        "n_queries", "k", (F.col("recall_at_k") >= F.lit(0.35)).alias("recall_floor_met")
     )
 
 
@@ -2005,26 +1984,7 @@ def q_stream_retrieval_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_ids = AIX.ivfpq_probe(
         spark, idx, queries, k=_LOOP_CAND, n_probe=_IVF_PROBE
     ).select("query_id", "vec_id")
-    emb_n = emb.select(
-        "vec_id", "embedding", SIM.norm(F.col("embedding")).alias("__cn")
-    )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        SIM.norm(F.col("embedding")).alias("__qn"),
-    )
-    cand = (
-        cand_ids.join(emb_n, "vec_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.try_divide(
-                SIM.dot(F.col("qvec"), F.col("embedding")),
-                F.col("__qn") * F.col("__cn"),
-            ).alias("cosine"),
-        )
-    )
+    cand = SIM._rescore(cand_ids, emb, queries, "vec_id", "embedding", "query_id")
     reranked = SIM.mmr_rerank(
         emb, queries, k=_LOOP_K, lam=0.7, candidates=cand
     )
@@ -2044,8 +2004,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 64)
     # corpus-derived n_bits (oracle mirrors via _nb_cte, target 2)
-    out = SIM.lsh_topk(emb, queries, k=5)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return SIM.lsh_topk(emb, queries, k=5)
 
 
 # --------------------------------------------------------------------------
@@ -3725,8 +3684,7 @@ def q_ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/similarity.sq8_topk``."""
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
-    out = SIM.sq8_topk(emb, queries, k=_SQ8_K, overfetch=_SQ8_OVERFETCH)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return SIM.sq8_topk(emb, queries, k=_SQ8_K, overfetch=_SQ8_OVERFETCH)
 
 
 _RRF_DEPTH, _RRF_K, _RRF_C = 50, 10, 60

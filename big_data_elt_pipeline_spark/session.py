@@ -13,6 +13,7 @@ DuckDB oracle and survive cluster-node TZ drift.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -21,6 +22,32 @@ from pyspark.sql import SparkSession
 # cluster-scale value because AQE coalesces post-shuffle partitions down
 # from the initial number at runtime.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Driver heap default: a share of physical memory, capped. In local mode
+# the driver JVM also runs the executors, and Python workers (Arrow
+# batches, mapInPandas) plus JVM off-heap memory live outside the heap, so
+# a heap sized near (or past) physical memory gets the process OOM-killed
+# instead of spilling. SPARK_GRAFT_DRIVER_MEM overrides the default.
+_DRIVER_MEM_CAP_GB = 48
+
+
+def default_driver_memory(meminfo: str | None = None) -> str:
+    """``spark.driver.memory`` default: 40% of the host's ``MemTotal`` in
+    whole GiB (at least 1g), capped at 48g — 6g on a 15.7 GiB host.
+    ``meminfo`` is ``/proc/meminfo`` text, read from the host when None;
+    where the host size is unknown (no ``/proc/meminfo``) the cap is
+    used."""
+    if meminfo is None:
+        try:
+            with open("/proc/meminfo", encoding="ascii") as f:
+                meminfo = f.read()
+        except OSError:
+            meminfo = ""
+    m = re.search(r"^MemTotal:\s+(\d+)\s*kB", meminfo, re.M)
+    if m is None:
+        return f"{_DRIVER_MEM_CAP_GB}g"
+    gb = int(m.group(1)) * 2 // 5 // (1024 * 1024)  # 40% of the kB total
+    return f"{max(1, min(_DRIVER_MEM_CAP_GB, gb))}g"
 
 
 def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
@@ -51,7 +78,10 @@ def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
         .config("spark.default.parallelism", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if not os.environ.get("SPARK_MASTER_URL"):
         builder = builder.master(f"local[{cpus}]")

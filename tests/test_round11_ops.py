@@ -91,19 +91,6 @@ def test_derive_bits_matches_python_derivation(spark):
     )
 
 
-def test_knn_graph_auto_equals_explicit_derived(spark):
-    """knn_graph() with the auto default is the SAME relation as passing
-    the derived width explicitly — auto is a default, not a new algorithm."""
-    from big_data_elt_pipeline_spark.operators import similarity as S
-    from big_data_elt_pipeline_spark.sources.tpch import read_table
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    bits = S.derive_bits(emb, S.KNN_TARGET_BUCKET_ROWS)
-    auto = {tuple(r) for r in S.knn_graph(emb, k=3).collect()}
-    explicit = {tuple(r) for r in S.knn_graph(emb, k=3, n_bits=bits).collect()}
-    assert auto == explicit and len(auto) > 0
-
-
 # --------------------------------------------------------------------------
 # epoch_shuffle: deterministic per-epoch training order
 # --------------------------------------------------------------------------
@@ -124,76 +111,6 @@ def test_epoch_order_is_distinct_permutation_per_epoch(spark):
     # deterministic re-evaluation
     again = {r["doc_id"]: r["pos"] for r in SH.epoch_order(docs, 0).collect()}
     assert again == e0
-
-
-# --------------------------------------------------------------------------
-# PQ/ADC ANN (Jégou et al. 2011)
-# --------------------------------------------------------------------------
-
-def test_pq_codes_domain_and_determinism(spark):
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    books = S.pq_codebooks(emb, 16)
-    cids = {c["cid"] for c in books.head()["__cents"]}
-    assert len(cids) == 16
-    codes = S.pq_encode(emb, books, m=8, dsub=8).collect()
-    n = emb.count()
-    assert len(codes) == n * 8  # one code per (vector, subspace)
-    assert {r["j"] for r in codes} == set(range(8))
-    assert {r["code"] for r in codes} <= cids  # codes come from the codebook
-    # a sampled codebook vector's own best code in every subspace is itself
-    by = {}
-    for r in codes:
-        by.setdefault(r["vec_id"], {})[r["j"]] = r["code"]
-    for cid in cids:
-        assert all(code == cid for code in by[cid].values()), (cid, by[cid])
-    # deterministic re-evaluation
-    again = S.pq_encode(emb, books, m=8, dsub=8).collect()
-    assert sorted(map(tuple, codes)) == sorted(map(tuple, again))
-
-
-def test_pq_topk_beats_random_recall(spark):
-    """ADC over 8-byte codes must preserve real neighborhood structure:
-    recall@5 vs exact L2 brute force well above the ~1% random baseline."""
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 16)
-    pq = S.pq_topk(emb, queries, k=5)
-    got = {(r["query_id"], r["vec_id"]) for r in pq.collect()}
-    # exact L2 truth via the cosine brute force won't do — compute L2 here
-    import numpy as np
-
-    rows = emb.collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    truth = set()
-    for q in range(16):
-        qi = np.where(ids == q)[0][0]
-        d = ((X - X[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        for j in np.argsort(d, kind="stable")[:5]:
-            truth.add((q, int(ids[j])))
-    recall = len(got & truth) / len(truth)
-    # measured 0.1375 on this fixture — the synthetic near-uniform
-    # embeddings are PQ's worst case (no cluster structure for 16 sampled
-    # codebook entries to exploit); the floor asserts structure survives
-    # quantization: random top-5 would score 5/499 ~ 1%
-    assert recall >= 0.05, recall
-    # every query produced exactly k ranked rows
-    from collections import Counter
-
-    per = Counter(q for q, _ in got)
-    assert all(v == 5 for v in per.values()) and len(per) == 16
 
 
 # --------------------------------------------------------------------------
@@ -365,196 +282,6 @@ def test_derive_bits_short_vectors_capped(spark):
 
 
 # --------------------------------------------------------------------------
-# ivfpq_topk: IVF cell pruning x PQ/ADC scan (second-wave r11)
-# --------------------------------------------------------------------------
-
-def test_ivfpq_candidates_come_from_probed_cells(spark):
-    """The pruning contract: every returned neighbor lives in one of the
-    query's n_probe nearest cells (assignment replicated in numpy from the
-    same deterministic centroid pick)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 16)
-    out = S.ivfpq_topk(emb, queries, k=5, n_cells=16, n_probe=4).collect()
-
-    cents = S.fixed_centroid_cells(emb, 16).head()["__cents"]
-    cell_ids = np.array([c["cell"] for c in cents])
-    C = np.array([c["cvec"] for c in cents], dtype=np.float64)
-    rows = emb.collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    cos = (X @ C.T) / (
-        np.linalg.norm(X, axis=1)[:, None] * np.linalg.norm(C, axis=1)[None, :]
-    )
-    # ties to the lowest cell id: argsort on (-cos, cell_id)
-    order = np.lexsort((cell_ids[None, :].repeat(len(X), 0), -cos), axis=1)
-    assigned = {int(ids[i]): int(cell_ids[order[i, 0]]) for i in range(len(X))}
-    probes = {
-        int(ids[i]): {int(cell_ids[j]) for j in order[i, :4]}
-        for i in range(len(X))
-        if ids[i] < 16
-    }
-    for r in out:
-        assert assigned[r["vec_id"]] in probes[r["query_id"]], (
-            r["query_id"], r["vec_id"], assigned[r["vec_id"]],
-        )
-
-
-def test_ivfpq_agrees_with_pq_on_shared_pairs(spark):
-    """Same ADC metric on both sides: any (query, neighbor) pair appearing
-    in both the pruned and the full-scan top-5 carries the identical
-    decimal-snapped distance; per query the pruned result holds exactly k
-    ranked rows 1..k and is deterministic across runs."""
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 16)
-    ivfpq = S.ivfpq_topk(emb, queries, k=5).collect()
-    pq = S.pq_topk(emb, queries, k=5).collect()
-
-    per = Counter(r["query_id"] for r in ivfpq)
-    assert len(per) == 16 and all(v == 5 for v in per.values())
-    ranks = {(r["query_id"], r["rank"]) for r in ivfpq}
-    assert len(ranks) == 80  # ranks are dense 1..5 per query
-
-    full = {(r["query_id"], r["vec_id"]): r["adc_l2sq"] for r in pq}
-    shared = 0
-    for r in ivfpq:
-        key = (r["query_id"], r["vec_id"])
-        if key in full:
-            shared += 1
-            assert r["adc_l2sq"] == full[key], key
-    assert shared > 0  # the prune keeps some true ADC winners
-
-    again = S.ivfpq_topk(emb, queries, k=5).collect()
-    assert sorted(map(tuple, ivfpq)) == sorted(map(tuple, again))
-
-
-# --------------------------------------------------------------------------
-# mmr_rerank: diversified top-k (third-wave r11)
-# --------------------------------------------------------------------------
-
-def test_mmr_first_pick_is_relevance_argmax_and_ranks_dense(spark):
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 4)
-    out = S.mmr_rerank(emb, queries, k=5, n_cand=20).collect()
-
-    per = Counter(r["query_id"] for r in out)
-    assert len(per) == 4 and all(v == 5 for v in per.values())
-    for q in per:
-        picks = sorted(
-            (r for r in out if r["query_id"] == q), key=lambda r: r["mmr_rank"]
-        )
-        assert [r["mmr_rank"] for r in picks] == [1, 2, 3, 4, 5]
-        assert len({r["vec_id"] for r in picks}) == 5  # no repeats
-        assert picks[0]["max_sim"] == 0.0
-        # rank 1 is the plain relevance argmax
-        assert picks[0]["relevance"] == max(r["relevance"] for r in picks)
-
-    bf = S.brute_force_topk(emb, queries, k=1).collect()
-    top1 = {(r["query_id"], r["vec_id"]) for r in bf}
-    got1 = {(r["query_id"], r["vec_id"]) for r in out if r["mmr_rank"] == 1}
-    assert got1 == top1
-
-
-def test_mmr_accepts_ann_candidate_front_end(spark):
-    """The r12 ``candidates`` hook: reranking an LSH candidate relation
-    picks only from those candidates, and with the default brute-force
-    candidates the explicit pass-through equals the built-in path."""
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 4)
-
-    ann = S.lsh_topk(emb, queries, k=10)
-    out = S.mmr_rerank(emb, queries, k=3, candidates=ann).collect()
-    cand_pairs = {(r["query_id"], r["vec_id"]) for r in ann.collect()}
-    assert out and all((r["query_id"], r["vec_id"]) in cand_pairs for r in out)
-
-    bf = S.brute_force_topk(emb, queries, 20)
-    explicit = S.mmr_rerank(emb, queries, k=5, candidates=bf).collect()
-    builtin = S.mmr_rerank(emb, queries, k=5, n_cand=20).collect()
-    assert sorted(map(tuple, explicit)) == sorted(map(tuple, builtin))
-
-
-def test_mmr_skips_near_duplicate_of_first_pick(spark):
-    """The property MMR exists for: a candidate nearly identical to the
-    first selection loses rank 2 to a more distant one even though plain
-    relevance would rank it second."""
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    # query 100 along e1; doc 2 is the plain-relevance runner-up but a
-    # near-duplicate of first-pick doc 1 (cos ~ 0.99998); doc 3 is a hair
-    # less relevant but angularly distant from doc 1 (cos ~ 0.9756)
-    rows = [
-        (100, [1.0, 0.0, 0.0]),
-        (1, [0.92, 0.1, 0.0]),
-        (2, [0.91, 0.1, 0.0]),
-        (3, [0.9, -0.1, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    q = df.filter(F.col("vec_id") == 100)
-    # plain relevance would rank doc 2 second...
-    bf = S.brute_force_topk(df, q, k=3).collect()
-    assert [r["vec_id"] for r in sorted(bf, key=lambda r: r["rank"])] == [1, 2, 3]
-    # ...MMR flips 2 and 3
-    out = S.mmr_rerank(df, q, k=3, n_cand=3, lam=0.5).collect()
-    by_rank = {r["mmr_rank"]: r["vec_id"] for r in out}
-    assert by_rank == {1: 1, 2: 3, 3: 2}, by_rank
-
-
-def test_mmr_round_layouts_are_answer_identical(spark):
-    """The adaptive per-query round layout (the default — rounds run one
-    task per core) and the forced serial ``round_partitions=1`` layout
-    return the SAME rows: partitioning never reorders the per-query
-    windows, which carry explicit tie-breaks (the BENCH_r13 mmr fix's
-    correctness pin)."""
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 6)
-    adaptive = S.mmr_rerank(emb, queries, k=5, n_cand=20).collect()
-    serial = S.mmr_rerank(
-        emb, queries, k=5, n_cand=20, round_partitions=1
-    ).collect()
-    wide = S.mmr_rerank(
-        emb, queries, k=5, n_cand=20, round_partitions=7
-    ).collect()
-    assert sorted(map(tuple, adaptive)) == sorted(map(tuple, serial))
-    assert sorted(map(tuple, adaptive)) == sorted(map(tuple, wide))
-
-
-# --------------------------------------------------------------------------
 # quality_survivors: quality-aware dedup keep policy (third-wave r11)
 # --------------------------------------------------------------------------
 
@@ -688,16 +415,3 @@ def test_auto_cells_reproduces_fixture_counts(spark):
     assert S.derive_cells(emb) == 16
 
 
-def test_ivfpq_auto_equals_explicit_derived(spark):
-    from pyspark.sql import functions as F
-
-    from big_data_elt_pipeline_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    q = emb.filter(F.col("vec_id") < 8)
-    cells = S.derive_cells(emb)
-    auto = {tuple(r) for r in S.ivfpq_topk(emb, q, k=5).collect()}
-    explicit = {tuple(r) for r in S.ivfpq_topk(emb, q, k=5, n_cells=cells).collect()}
-    assert auto == explicit and len(auto) == 40

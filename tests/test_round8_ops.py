@@ -1,4 +1,4 @@
-"""Round-8 operator contracts: SQ8 quantized ANN, RRF fusion, UniMax
+"""Round-8 operator contracts: RRF fusion, UniMax
 budgeting, count-min sketch, priority sampling, deterministic splits —
 semantics the SQL oracles can't pin (recall quality, mergeability,
 estimator bounds, partitioning invariance)."""
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from big_data_elt_pipeline_spark.functions import sketches as SK
 from big_data_elt_pipeline_spark.functions import text as TX
 from big_data_elt_pipeline_spark.operators import sampling as SMP
-from big_data_elt_pipeline_spark.operators import similarity as SIM
 from big_data_elt_pipeline_spark.operators.retrieval import rrf_fuse, tokenize
 from big_data_elt_pipeline_spark.sources.tpch import read_table
 from tests.conftest import SF_SMOKE
@@ -23,49 +22,6 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def docs(spark):
     return read_table(spark, SF_SMOKE, "documents").cache()
-
-
-# ---------------------------------------------------------------- SQ8 ANN
-
-
-def test_sq8_codes_in_range(spark, emb):
-    stats = SIM.sq8_train(emb)
-    coded = emb.crossJoin(F.broadcast(stats)).select(
-        SIM.sq8_encode(F.col("embedding"), F.col("mns"), F.col("scs")).alias("code")
-    )
-    bad = coded.select(
-        F.exists("code", lambda c: (c < 0) | (c > 127)).alias("bad")
-    ).filter("bad")
-    assert bad.count() == 0
-
-
-def test_sq8_recall_vs_brute_force(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 16)
-    exact = {
-        (r.query_id, r.vec_id)
-        for r in SIM.brute_force_topk(emb, queries, k=5).collect()
-    }
-    approx = {
-        (r.query_id, r.vec_id)
-        for r in SIM.sq8_topk(emb, queries, k=5, overfetch=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    # 7-bit quantization at d=64 keeps candidate ordering almost exact;
-    # the rerank then restores exact cosines — recall should be near 1
-    assert recall >= 0.9, recall
-
-
-def test_sq8_partitioning_invariance(spark, emb):
-    queries = emb.filter(F.col("vec_id") < 8)
-    a = sorted(
-        (r.query_id, r.rank, r.vec_id)
-        for r in SIM.sq8_topk(emb, queries, k=5).collect()
-    )
-    b = sorted(
-        (r.query_id, r.rank, r.vec_id)
-        for r in SIM.sq8_topk(emb.repartition(7), queries, k=5).collect()
-    )
-    assert a == b
 
 
 # ---------------------------------------------------------------- RRF
@@ -1039,48 +995,6 @@ def test_curation_recipe_funnel_contract(spark):
     assert rows[0].removed > 0 and rows[3].removed > 0
 
 
-def test_knn_graph_laws(spark, emb):
-    from big_data_elt_pipeline_spark.operators.similarity import knn_graph
-
-    edges = knn_graph(emb, k=5, n_bits=4).collect()
-    eset = {(r.src, r.dst) for r in edges}
-    for r in edges:
-        assert 1 <= r.rank <= 5
-        # mutual flag law: flagged iff the reversed directed edge exists
-        assert r.mutual == ((r.dst, r.src) in eset), (r.src, r.dst)
-    # asymmetry exists at this bucket width (otherwise the flag is vacuous)
-    assert any(not r.mutual for r in edges)
-    assert any(r.mutual for r in edges)
-    # per-src uniqueness of ranks
-    seen = {}
-    for r in edges:
-        assert (r.src, r.rank) not in seen
-        seen[(r.src, r.rank)] = r.dst
-
-
-def test_knn_graph_candidates_share_bucket(spark, emb):
-    from big_data_elt_pipeline_spark.operators.similarity import (
-        component_means,
-        knn_graph,
-        sign_bucket,
-    )
-    from pyspark.sql import functions as F
-
-    # knn_graph buckets are CENTERED on the corpus per-dim means
-    mu = F.broadcast(component_means(emb, 4))
-    buckets = {
-        r.vec_id: r.b
-        for r in emb.crossJoin(mu)
-        .select(
-            "vec_id",
-            sign_bucket(F.col("embedding"), 4, F.col("__mus")).alias("b"),
-        )
-        .collect()
-    }
-    for r in knn_graph(emb, k=3, n_bits=4).collect():
-        assert buckets[r.src] == buckets[r.dst]
-
-
 def test_stream_scoring_equals_batch(spark, docs):
     from big_data_elt_pipeline_spark.operators.classify import (
         logreg_predict,
@@ -1114,32 +1028,3 @@ def test_stream_scoring_equals_batch(spark, docs):
     assert streamed == batch
 
 
-def test_knn_semantic_clusters_vs_union_find(spark, emb):
-    from big_data_elt_pipeline_spark.operators.dedup import neardup_clusters
-    from big_data_elt_pipeline_spark.operators.similarity import knn_graph
-
-    g = knn_graph(emb, k=5, n_bits=4)
-    pairs = [
-        (r.src, r.dst)
-        for r in g.filter(F.col("mutual") & (F.col("src") < F.col("dst"))).collect()
-    ]
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expected = {}
-    for a, b in pairs:
-        for x in (a, b):
-            expected[x] = find(x)
-    edges_df = spark.createDataFrame(pairs, "id1 long, id2 long")
-    got = {r.doc_id: r.cluster_id for r in neardup_clusters(edges_df).collect()}
-    assert got == expected

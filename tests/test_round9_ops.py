@@ -1,106 +1,14 @@
-"""Round-9 operator contracts: centered sign-bucketing (the knn_graph /
-lsh_topk / embedding_neardup scale fix — r8 verdict #3) and the BPE
-pair-space-exhaustion guard. Semantics the SQL oracles can't pin: bucket
-OCCUPANCY under adversarial-but-realistic shifted embeddings, recall
-preservation, loop convergence."""
+"""Round-9 operator contracts: the BPE pair-space-exhaustion guard,
+ranking and vocabulary evaluation, source mixtures and grouped
+percentiles. Semantics the SQL oracles can't pin: loop convergence,
+bounds, hand cases. The centred sign-bucketing contracts live in
+tests/test_ann.py."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_elt_pipeline_spark.operators import similarity as SIM
 from big_data_elt_pipeline_spark.sources.tpch import read_table
 from tests.conftest import SF_SMOKE
-
-N_BITS = 4
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return read_table(spark, SF_SMOKE, "embeddings").cache()
-
-
-@pytest.fixture(scope="module")
-def shifted(spark, emb):
-    """All-positive-shifted twin: +2.0 on every component (unit vectors
-    have |x| <= 1, so every raw sign bit saturates to 1) — the realistic
-    failure mode of production embedding models, amplified to make the
-    uncentered degeneracy EXACT rather than merely likely."""
-    return emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: (x.cast("double") + F.lit(2.0)).cast("float")
-        ).alias("embedding"),
-    ).cache()
-
-
-def _bucket_hist(df, means=None):
-    mu = F.broadcast(SIM.component_means(df, N_BITS)) if means else None
-    src = df.crossJoin(mu) if means else df
-    m = F.col("__mus") if means else None
-    rows = (
-        src.select(SIM.sign_bucket(F.col("embedding"), N_BITS, m).alias("b"))
-        .groupBy("b")
-        .count()
-        .collect()
-    )
-    return {r.b: r["count"] for r in rows}
-
-
-def test_uncentered_buckets_degenerate_on_shifted_corpus(spark, shifted):
-    # the r8-verdict pathology, pinned: every vector lands in the all-ones
-    # bucket, so the bucket self-join IS the cross join
-    hist = _bucket_hist(shifted)
-    n = shifted.count()
-    assert hist == {(1 << N_BITS) - 1: n}
-
-
-def test_centered_buckets_rebalance_shifted_corpus(spark, shifted):
-    # center-before-bucket splits each dimension ~half/half: max occupancy
-    # collapses from n to well under n/4 (observed 40/500 at 4 bits),
-    # bounding the self-join's sum of squared bucket sizes
-    hist = _bucket_hist(shifted, means=True)
-    n = shifted.count()
-    assert max(hist.values()) <= n / 4
-    assert len(hist) >= (1 << N_BITS) // 2  # most buckets actually occupied
-
-
-def test_centered_buckets_shift_invariant(spark, emb, shifted):
-    # exact law: (x + c) - mean(x + c) == x - mean(x), so centered bucket
-    # ids are IDENTICAL on the original and the shifted corpus — centering
-    # removes the shift axis entirely, not just approximately
-    def ids(df):
-        mu = F.broadcast(SIM.component_means(df, N_BITS))
-        return {
-            r.vec_id: r.b
-            for r in df.crossJoin(mu)
-            .select(
-                "vec_id",
-                SIM.sign_bucket(
-                    F.col("embedding"), N_BITS, F.col("__mus")
-                ).alias("b"),
-            )
-            .collect()
-        }
-
-    assert ids(emb) == ids(shifted)
-
-
-def test_centered_knn_recall_unchanged_by_shift(spark, emb, shifted):
-    # recall vs brute force is a property of the corpus GEOMETRY; the
-    # centered algorithm sees the same geometry before and after the shift
-    # (observed 0.130 vs 0.126 at 4 bits — the small residual is cosine
-    # itself changing under translation, not the bucketing)
-    def recall(df):
-        got = {(r.src, r.dst) for r in SIM.knn_graph(df, k=5, n_bits=N_BITS).collect()}
-        truth = {
-            (r.query_id, r.vec_id)
-            for r in SIM.brute_force_topk(df, df, k=5).collect()
-        }
-        return len(got & truth) / len(truth)
-
-    r_orig, r_shift = recall(emb), recall(shifted)
-    assert abs(r_orig - r_shift) <= 0.05
-    assert r_shift >= 0.1  # bucket-limited by contract, but never degenerate
 
 
 def test_bpe_train_survives_pair_space_exhaustion(spark):
